@@ -36,7 +36,12 @@ def pynb_log_parser(argv: list[str]) -> int:
     args = p.parse_args(argv)
 
     from .plans import summarize_spans
-    from .sinks import make_mermaid_dag, make_mermaid_gantt, write_spans_to_directory
+    from .sinks import (
+        collect_runs,
+        make_mermaid_dag,
+        make_mermaid_gantt,
+        write_spans_to_directory,
+    )
     from .spanlog import read_span_json
 
     spark = _spark()
@@ -45,29 +50,25 @@ def pynb_log_parser(argv: list[str]) -> int:
     print(f"--- pynb-log-parser (composable_logs_spark) ---")
     print(f"Number of spans loaded {n}")
     summary = summarize_spans(spans)
-    run_ids = [r["run_id"] for r in summary.workflow_runs.select("run_id").collect()]
 
     if args.output_directory is not None:
         write_spans_to_directory(summary, args.output_directory)
 
+    runs = list(collect_runs(summary).values())
+
     if args.output_filepath_mermaid_gantt is not None:
         out = args.output_filepath_mermaid_gantt
         out.parent.mkdir(parents=True, exist_ok=True)
-        out.write_text("\n".join(make_mermaid_gantt(summary, rid) for rid in run_ids))
+        out.write_text("\n".join(make_mermaid_gantt(run) for run in runs))
 
     if args.output_filepath_mermaid_dag is not None:
         out = args.output_filepath_mermaid_dag
         if out.suffix != ".mmd":
             raise SystemExit("--output_filepath_mermaid_dag must end in .mmd")
         out.parent.mkdir(parents=True, exist_ok=True)
-        dag_text = "\n".join(
-            make_mermaid_dag(summary, rid, generate_links=True) for rid in run_ids
-        )
-        out.write_text(dag_text)
+        out.write_text("\n".join(make_mermaid_dag(run) for run in runs))
         # reference also writes a -nolinks variant (cli_pynb_log_parser.py:134-146)
-        nolinks = "\n".join(
-            make_mermaid_dag(summary, rid, generate_links=False) for rid in run_ids
-        )
+        nolinks = "\n".join(make_mermaid_dag(run, generate_links=False) for run in runs)
         out.with_name(out.name.replace(".mmd", "-nolinks.mmd")).write_text(nolinks)
 
     print(" - Done")

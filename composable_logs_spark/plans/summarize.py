@@ -70,7 +70,7 @@ def _duration_s(start_col, end_col):
     )
 
 
-def summarize_spans(spans: DataFrame, legacy_deps: bool = True) -> SpanSummary:
+def summarize_spans(spans: DataFrame) -> SpanSummary:
     # --- pre-digested narrow cache (r13 optimization round) -------------
     # The cache used to hold FULL spans (context struct, raw events
     # array, links, attributes). Profiling the 940k-span big fixture
@@ -264,18 +264,14 @@ def summarize_spans(spans: DataFrame, legacy_deps: bool = True) -> SpanSummary:
         .where(F.col("link.attributes").getItem("type") == "task-dependency")
         .select("run_id", F.col("link.context.span_id").alias("from_span_id"), "to_span_id")
     )
-    deps = link_deps
-    if legacy_deps:
-        legacy = (
-            spans.where(F.col("name") == S.SPAN_TASK_DEPENDENCY)
-            .select(
-                "run_id",
-                F.col("attributes").getItem("from_task_span_id").alias("from_span_id"),
-                F.col("attributes").getItem("to_task_span_id").alias("to_span_id"),
-            )
-        )
-        deps = deps.unionByName(legacy)
-    deps = deps.dropDuplicates(["run_id", "from_span_id", "to_span_id"])  # A11
+    legacy_deps = spans.where(F.col("name") == S.SPAN_TASK_DEPENDENCY).select(
+        "run_id",
+        F.col("attributes").getItem("from_task_span_id").alias("from_span_id"),
+        F.col("attributes").getItem("to_task_span_id").alias("to_span_id"),
+    )
+    deps = link_deps.unionByName(legacy_deps).dropDuplicates(
+        ["run_id", "from_span_id", "to_span_id"]
+    )  # A11
 
     # --- logged values (named-value spans, F4 + A8 + decode) ---------------
     data_span_cols = [
@@ -359,8 +355,9 @@ def summarize_spans(spans: DataFrame, legacy_deps: bool = True) -> SpanSummary:
     artifacts = artifacts_base.withColumn("length", F.length("content").cast("long"))
 
     # Per reference :161-167 a logged notebook.ipynb implies a derived
-    # notebook.html artifact in the summary; content conversion (C14) is a
-    # sink-side UDF — here we materialise the row with the source content.
+    # notebook.html artifact in the summary. The row carries the source
+    # ipynb content; the sinks' artifact writer (sinks/report.py) does
+    # the ipynb -> HTML conversion (C14) when it writes the file.
     derived_html = (
         artifacts.where(F.col("name") == "notebook.ipynb")
         .withColumn("name", F.lit("notebook.html"))

@@ -12,46 +12,17 @@ multiple runs in one span table (an extension — the reference CLI is
 one-run-per-invocation) each run gets the reference layout inside its
 own ``{run_id}/`` subdirectory.
 
-The summary DataFrames are distributed; the artifact blobs are written
-from collected per-run partitions — a per-run reporting tree is small by
-construction (one workflow's artifacts), so driver-side writing matches
-the reference CLI. For bulk export of MANY runs use
-``df.write.partitionBy("run_id")`` on the artifacts table instead.
+Renders from the collected per-run report (``report.collect_runs``, one
+collect per summary table); this module only handles the layout.
 """
 
 from __future__ import annotations
 
 import json
-import re
 from pathlib import Path
 
-from pyspark.sql import functions as F
-
 from ..plans.summarize import SpanSummary
-
-
-def _safe_name(s: str) -> str:
-    """Path-safety (reference F6, cli_pynb_log_parser.py:25-28 + dir-name
-    building :59-70): ``/`` and ``.`` become ``-``, as the reference's
-    ``task_dir`` builder does."""
-    return re.sub(r"[/.]", "-", s)
-
-
-def _safe_artifact_name(s: str) -> str:
-    """Artifact FILE names keep their extension dots but must not carry
-    separators or traversal components — names come from span-log data."""
-    s = s.replace("\\", "_").replace("/", "_")
-    return "_" if s in (".", "..") else s
-
-
-def safe_path(base: Path, *parts: str) -> Path:
-    # is_relative_to, not str.startswith: a prefix check lets '../out2'
-    # escape to a sibling directory that shares the base's name prefix
-    # (/tmp/out -> /tmp/out2)
-    out = base.joinpath(*parts).resolve()
-    if not out.is_relative_to(base.resolve()):
-        raise ValueError(f"unsafe path escape: {parts}")
-    return out
+from .report import collect_runs, run_dir, safe_name, safe_path, write_artifact
 
 
 def write_spans_to_directory(summary: SpanSummary, out_dir: str | Path) -> list[str]:
@@ -59,77 +30,50 @@ def write_spans_to_directory(summary: SpanSummary, out_dir: str | Path) -> list[
     base = Path(out_dir)
     base.mkdir(parents=True, exist_ok=True)
     created: list[str] = []
+    runs = collect_runs(summary)
 
-    workflows = {r["run_id"]: r.asDict() for r in summary.workflow_runs.collect()}
-    tasks = [r.asDict() for r in summary.task_runs.collect()]
-    artifacts = [r.asDict() for r in summary.artifacts.collect()]
-    values = [r.asDict() for r in summary.logged_values.collect()]
-
-    # single run -> reference-identical layout directly at out_dir
-    def run_base(run_id: str) -> Path:
-        if len(workflows) == 1:
-            return base
-        return safe_path(base, _safe_name(run_id))
-
-    for run_id, wf in workflows.items():
-        run_dir = run_base(run_id)
-        run_dir.mkdir(parents=True, exist_ok=True)
+    for run_id, run in runs.items():
+        wf = run.workflow
+        rb = run_dir(base, runs, run_id)
+        rb.mkdir(parents=True, exist_ok=True)
         meta = {
             "run_id": run_id,
             "duration_s": wf["duration_s"],
             "is_success": wf["is_success"],
             "attributes": wf["attributes"] or {},
         }
-        p = run_dir / "run-time-metadata.json"
+        p = rb / "run-time-metadata.json"
         p.write_text(json.dumps(meta, indent=2, default=str))
         created.append(str(p))
 
-    for t in tasks:
-        status = "OK" if t["is_success"] else "FAILED"
-        dir_name = "--".join(
-            [
-                f"{t['task_type'] or 'python'}-task",
-                _safe_name(t["task_id"] or "unknown"),
-                t["span_id"],
-                status,
-            ]
-        )
-        rb = run_base(t["run_id"])
-        task_dir = safe_path(rb, dir_name)
-        task_dir.mkdir(parents=True, exist_ok=True)
-        meta = {
-            "task_id": t["task_id"],
-            "span_id": t["span_id"],
-            "duration_s": t["duration_s"],
-            "is_success": t["is_success"],
-            "n_exceptions": t["n_exceptions"],
-            "attributes": t["attributes"] or {},
-            "logged_values": {
-                v["name"]: _value_of(v)
-                for v in values
-                if v["task_span_id"] == t["span_id"] and v["run_id"] == t["run_id"]
-            },
-        }
-        p = task_dir / "run-time-metadata.json"
-        p.write_text(json.dumps(meta, indent=2, default=str))
-        created.append(str(p))
+        for t in run.tasks:
+            status = "OK" if t["is_success"] else "FAILED"
+            dir_name = "--".join(
+                [
+                    f"{t['task_type'] or 'python'}-task",
+                    safe_name(t["task_id"] or "unknown"),
+                    t["span_id"],
+                    status,
+                ]
+            )
+            task_dir = safe_path(rb, dir_name)
+            task_dir.mkdir(parents=True, exist_ok=True)
+            meta = {
+                "task_id": t["task_id"],
+                "span_id": t["span_id"],
+                "duration_s": t["duration_s"],
+                "is_success": t["is_success"],
+                "n_exceptions": t["n_exceptions"],
+                "attributes": t["attributes"] or {},
+                "logged_values": run.values.get(t["span_id"], {}),
+            }
+            p = task_dir / "run-time-metadata.json"
+            p.write_text(json.dumps(meta, indent=2, default=str))
+            created.append(str(p))
 
-        # artifacts live under an artifacts/ subdirectory
-        # (cli_pynb_log_parser.py:76-81)
-        for a in artifacts:
-            if a["task_span_id"] == t["span_id"] and a["run_id"] == t["run_id"]:
-                ap = safe_path(
-                    rb, dir_name, "artifacts", _safe_artifact_name(a["name"])
-                )
-                ap.parent.mkdir(parents=True, exist_ok=True)
-                ap.write_bytes(bytes(a["content"]))
-                created.append(str(ap))
+            # artifacts live under an artifacts/ subdirectory
+            # (cli_pynb_log_parser.py:76-81)
+            for a in run.artifacts.get(t["span_id"], []):
+                created.append(str(write_artifact(task_dir / "artifacts", a)))
 
     return created
-
-
-def _value_of(v: dict):
-    for k in ("value_str", "value_long", "value_double", "value_bool", "value_json"):
-        if v.get(k) is not None:
-            return v[k]
-    return None

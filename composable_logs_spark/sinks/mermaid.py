@@ -5,18 +5,16 @@ dag, :117-161 gantt; cli_pynb_log_parser.py:126-146): same comment
 banner, ``TASK_SPAN_ID_{span_id}`` node ids, ``<a href=...>`` task
 links with ``task.*`` attribute lines, ``generate_links`` flag, gantt
 sections per task with unix-epoch-second timestamps and ``dateFormat
-x``. Text formatting is presentation-layer and runs driver-side over
-the (small) per-run summary — the heavy lifting (summarisation) already
-happened distributed.
+x``. Pure functions over one collected ``RunReport``
+(``report.collect_runs``): they start no Spark job — the heavy lifting
+(summarisation) already happened distributed.
 """
 
 from __future__ import annotations
 
 import datetime
 
-from pyspark.sql import functions as F
-
-from ..plans.summarize import SpanSummary
+from .report import RunReport
 
 
 def render_seconds(seconds: float) -> str:
@@ -48,30 +46,17 @@ def _make_link_to_task_run(attributes: dict, task_id: str, span_id: str) -> str:
     return f"{host}/#/experiments/{task_id}/runs/{span_id}"
 
 
-def make_mermaid_dag(
-    summary: SpanSummary, run_id: str, generate_links: bool = True
-) -> str:
+def make_mermaid_dag(run: RunReport, generate_links: bool = True) -> str:
     """Render one run's task DAG as mermaid 'graph LR' input-file text
     (reference mermaid_graphs.py:49-114)."""
-    tasks = (
-        summary.task_runs.where(F.col("run_id") == run_id)
-        .select("span_id", "task_id", "task_type", "attributes", "is_success")
-        .orderBy("start_time")
-        .collect()
-    )
-    deps = (
-        summary.deps.where(F.col("run_id") == run_id)
-        .select("from_span_id", "to_span_id")
-        .collect()
-    )
-    by_id = {t["span_id"]: t for t in tasks}
+    span_ids = {t["span_id"] for t in run.tasks}
     lines = [
         "graph LR",
         "    %% Mermaid input file for drawing task dependencies ",
         "    %% See https://mermaid-js.github.io/mermaid",
         "    %%",
     ]
-    for t in tasks:
+    for t in run.tasks:
         attrs = dict(t["attributes"] or {})
         desc = _make_header(t["task_id"], t["task_type"])
         if not t["is_success"]:
@@ -92,26 +77,18 @@ def make_mermaid_dag(
         else:
             label = desc
         lines.append(f'    TASK_SPAN_ID_{t["span_id"]}["{label}"]')
-    for d in deps:
-        if d["from_span_id"] in by_id and d["to_span_id"] in by_id:
+    for d in run.deps:
+        if d["from_span_id"] in span_ids and d["to_span_id"] in span_ids:
             lines.append(
                 f'    TASK_SPAN_ID_{d["from_span_id"]} --> TASK_SPAN_ID_{d["to_span_id"]}'
             )
     return "\n".join(lines) + "\n"
 
 
-def make_mermaid_gantt(summary: SpanSummary, run_id: str) -> str:
+def make_mermaid_gantt(run: RunReport) -> str:
     """Render one run's tasks as a mermaid gantt input file
     (reference mermaid_graphs.py:117-161): one section per task,
     unix-epoch-second timestamps with ``dateFormat x``."""
-    tasks = (
-        summary.task_runs.where(F.col("run_id") == run_id)
-        .select(
-            "task_id", "task_type", "start_time", "end_time", "duration_s", "is_success"
-        )
-        .orderBy("start_time")
-        .collect()
-    )
     lines = [
         "gantt",
         "    %% Mermaid input file for drawing Gantt chart of runlog runtimes",
@@ -130,7 +107,7 @@ def make_mermaid_gantt(summary: SpanSummary, run_id: str) -> str:
             ts = ts.replace(tzinfo=epoch)
         return int(ts.timestamp())
 
-    for t in tasks:
+    for t in run.tasks:
         lines.append(f"    section {_make_header(t['task_id'], t['task_type'])}")
         if t["is_success"]:
             description, modifier = "OK", ""

@@ -4,11 +4,10 @@ Reference: cli_generate_static_data.py:75-201 — union the workflow entry
 and task entries of every run into one ``static_data.json`` under a
 www-root, plus per-span artifact directories.
 
-Spark shape: ``workflow_runs ∪ task_runs`` via unionByName with missing
-columns (U3), serialised to one JSON document. The union is computed
-distributed; the final single-file write is a driver-side dump of the
-per-run reporting dataset (small). The mermaid artifacts per run reuse
-the S9 generators.
+Renders from the collected per-run report (``report.collect_runs``, one
+collect per summary table): the workflow ∪ task entry list (U3) is built
+in plain Python, and each run's mermaid artifacts reuse the S9 generators
+over the same report.
 """
 
 from __future__ import annotations
@@ -16,44 +15,12 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
-from pyspark.sql import functions as F
-
 from ..plans.summarize import SpanSummary
 from .mermaid import make_mermaid_dag, make_mermaid_gantt
+from .report import collect_runs, run_dir, safe_path, write_artifact
 
 
-def static_data_frame(summary: SpanSummary):
-    """The U3 union as a DataFrame (one row per workflow or task run)."""
-    wf = summary.workflow_runs.select(
-        F.lit("workflow").alias("entry_type"),
-        "run_id",
-        "span_id",
-        F.lit(None).cast("string").alias("task_id"),
-        F.lit(None).cast("string").alias("task_type"),
-        "start_time",
-        "end_time",
-        "duration_s",
-        "is_success",
-        "attributes",
-    )
-    tasks = summary.task_runs.select(
-        F.lit("task").alias("entry_type"),
-        "run_id",
-        "span_id",
-        "task_id",
-        "task_type",
-        "start_time",
-        "end_time",
-        "duration_s",
-        "is_success",
-        "attributes",
-    )
-    return wf.unionByName(tasks)
-
-
-def write_static_data(
-    summary: SpanSummary, www_root: str | Path, with_mermaid: bool = True
-) -> Path:
+def write_static_data(summary: SpanSummary, www_root: str | Path) -> Path:
     """Reference-layout www-root (cli_generate_static_data.py:75-175):
     per-workflow reporting artifacts under ``artifacts/workflow/{span}/``
     (dag.mmd + dag-nolinks.mmd + gantt.mmd + run-time-metadata.json),
@@ -65,107 +32,59 @@ def write_static_data(
     subdirectory."""
     root = Path(www_root)
     root.mkdir(parents=True, exist_ok=True)
-    wf_rows = [r.asDict() for r in summary.workflow_runs.collect()]
-    task_rows = [r.asDict() for r in summary.task_runs.collect()]
-    art_rows = [r.asDict() for r in summary.artifacts.collect()]
-    val_rows = [r.asDict() for r in summary.logged_values.collect()]
-    single = len(wf_rows) == 1
+    runs = collect_runs(summary)
 
-    def art_base(run_id: str) -> Path:
-        return root if single else root / run_id.replace("/", "-").replace(".", "-")
-
-    entries = []
-    wf_span_of_run: dict[str, str] = {}
-    for wf in wf_rows:
-        wf_span_of_run[wf["run_id"]] = wf["span_id"]
-        adir = art_base(wf["run_id"]) / "artifacts" / "workflow" / wf["span_id"]
+    wf_entries, task_entries = [], []
+    for run_id, run in runs.items():
+        wf = run.workflow
+        base = run_dir(root, runs, run_id)
+        adir = safe_path(base, "artifacts", "workflow", wf["span_id"])
         adir.mkdir(parents=True, exist_ok=True)
-        names: list[str] = []
-        if with_mermaid:
-            (adir / "dag.mmd").write_text(
-                make_mermaid_dag(summary, wf["run_id"], generate_links=True)
-            )
-            (adir / "dag-nolinks.mmd").write_text(
-                make_mermaid_dag(summary, wf["run_id"], generate_links=False)
-            )
-            (adir / "gantt.mmd").write_text(make_mermaid_gantt(summary, wf["run_id"]))
-            names += ["dag.mmd", "dag-nolinks.mmd", "gantt.mmd"]
-        wf_meta = {
-            "run_id": wf["run_id"],
-            "span_id": wf["span_id"],
-            "duration_s": wf["duration_s"],
-            "is_success": wf["is_success"],
-            "attributes": dict(wf["attributes"] or {}),
-        }
-        (adir / "run-time-metadata.json").write_text(json.dumps(wf_meta, indent=2))
-        names.append("run-time-metadata.json")
-        entries.append(
-            {
-                "entry_type": "workflow",
-                "type": "workflow",
-                "parent_span_id": None,
-                "run_id": wf["run_id"],
-                "span_id": wf["span_id"],
-                "task_id": None,
-                "task_type": None,
-                "start_time": str(wf["start_time"]),
-                "end_time": str(wf["end_time"]),
-                "duration_s": wf["duration_s"],
-                "is_success": wf["is_success"],
-                "attributes": dict(wf["attributes"] or {}),
-                "artifacts": names,
-            }
+        (adir / "dag.mmd").write_text(make_mermaid_dag(run, generate_links=True))
+        (adir / "dag-nolinks.mmd").write_text(make_mermaid_dag(run, generate_links=False))
+        (adir / "gantt.mmd").write_text(make_mermaid_gantt(run))
+        (adir / "run-time-metadata.json").write_text(
+            _metadata(wf, "run_id", "span_id", "duration_s", "is_success")
         )
+        names = ["dag.mmd", "dag-nolinks.mmd", "gantt.mmd", "run-time-metadata.json"]
+        wf_entries.append(_entry("workflow", wf, None, names))
 
-    for t in task_rows:
-        adir = art_base(t["run_id"]) / "artifacts" / "task" / t["span_id"]
-        adir.mkdir(parents=True, exist_ok=True)
-        names = []
-        for a in art_rows:
-            if a["task_span_id"] == t["span_id"] and a["run_id"] == t["run_id"]:
-                name = a["name"].replace("\\", "_").replace("/", "_")
-                (adir / name).write_bytes(bytes(a["content"]))
-                names.append(name)
-        task_meta = {
-            "run_id": t["run_id"],
-            "span_id": t["span_id"],
-            "task_id": t["task_id"],
-            "duration_s": t["duration_s"],
-            "is_success": t["is_success"],
-            "attributes": dict(t["attributes"] or {}),
-        }
-        (adir / "run-time-metadata.json").write_text(json.dumps(task_meta, indent=2))
-        names.append("run-time-metadata.json")
-        entries.append(
-            {
-                "entry_type": "task",
-                "type": "task",
-                "parent_span_id": wf_span_of_run.get(t["run_id"]),
-                "run_id": t["run_id"],
-                "span_id": t["span_id"],
-                "task_id": t["task_id"],
-                "task_type": t["task_type"],
-                "start_time": str(t["start_time"]),
-                "end_time": str(t["end_time"]),
-                "duration_s": t["duration_s"],
-                "is_success": t["is_success"],
-                "attributes": dict(t["attributes"] or {}),
-                "artifacts": names,
-                "logged_values": {
-                    v["name"]: _value_of(v)
-                    for v in val_rows
-                    if v["task_span_id"] == t["span_id"] and v["run_id"] == t["run_id"]
-                },
-            }
-        )
+        for t in run.tasks:
+            adir = safe_path(base, "artifacts", "task", t["span_id"])
+            adir.mkdir(parents=True, exist_ok=True)
+            names = [write_artifact(adir, a).name for a in run.artifacts.get(t["span_id"], [])]
+            (adir / "run-time-metadata.json").write_text(
+                _metadata(t, "run_id", "span_id", "task_id", "duration_s", "is_success")
+            )
+            names.append("run-time-metadata.json")
+            entry = _entry("task", t, wf["span_id"], names)
+            entry["logged_values"] = run.values.get(t["span_id"], {})
+            task_entries.append(entry)
 
     out = root / "static_data.json"
-    out.write_text(json.dumps(entries, indent=2))
+    out.write_text(json.dumps(wf_entries + task_entries, indent=2))
     return out
 
 
-def _value_of(v: dict):
-    for k in ("value_str", "value_long", "value_double", "value_bool", "value_json"):
-        if v.get(k) is not None:
-            return v[k]
-    return None
+def _metadata(row: dict, *keys: str) -> str:
+    meta = {k: row[k] for k in keys}
+    meta["attributes"] = dict(row["attributes"] or {})
+    return json.dumps(meta, indent=2)
+
+
+def _entry(kind: str, row: dict, parent_span_id: str | None, artifacts: list[str]) -> dict:
+    return {
+        "entry_type": kind,
+        "type": kind,
+        "parent_span_id": parent_span_id,
+        "run_id": row["run_id"],
+        "span_id": row["span_id"],
+        "task_id": row.get("task_id"),
+        "task_type": row.get("task_type"),
+        "start_time": str(row["start_time"]),
+        "end_time": str(row["end_time"]),
+        "duration_s": row["duration_s"],
+        "is_success": row["is_success"],
+        "attributes": dict(row["attributes"] or {}),
+        "artifacts": artifacts,
+    }

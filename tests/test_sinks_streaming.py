@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from composable_logs_spark.plans import summarize_spans
 from composable_logs_spark.sinks import (
+    collect_runs,
     make_mermaid_dag,
     make_mermaid_gantt,
     write_spans_to_directory,
@@ -93,13 +94,17 @@ def test_directory_sink_multi_run_layout(spark, tmp_path):
         assert list(rd.glob("python-task--*"))
 
 
+def _one_run(spark, spans):
+    (run,) = collect_runs(summarize_spans(spans_df(spark, spans))).values()
+    return run
+
+
 def test_mermaid_dag(spark):
     # reference input-file format (mermaid_graphs.py:49-114):
     # TASK_SPAN_ID_ node ids, header "{id} ({Type} task)", <a href> links
     # with sorted task.* attribute lines, comment banner
-    s = summarize_spans(spans_df(spark, FX.compose3(0)))
-    run_id = s.workflow_runs.collect()[0]["run_id"]
-    mmd = make_mermaid_dag(s, run_id)
+    run = _one_run(spark, FX.compose3(0))
+    mmd = make_mermaid_dag(run)
     assert mmd.startswith("graph LR")
     assert "%% See https://mermaid-js.github.io/mermaid" in mmd
     assert "TASK_SPAN_ID_0x" in mmd
@@ -108,22 +113,18 @@ def test_mermaid_dag(spark):
     assert mmd.count("-->") == 2
     assert "/#/experiments/input_1/runs/" in mmd
     # nolinks variant: plain headers, no <a href>
-    nolinks = make_mermaid_dag(s, run_id, generate_links=False)
+    nolinks = make_mermaid_dag(run, generate_links=False)
     assert "<a href" not in nolinks
     assert '["input_1 (Python task)"]' in nolinks
 
 
 def test_mermaid_dag_marks_failures(spark):
-    s = summarize_spans(spans_df(spark, FX.parallel_fail(1)))
-    run_id = s.workflow_runs.collect()[0]["run_id"]
-    mmd = make_mermaid_dag(s, run_id)
+    mmd = make_mermaid_dag(_one_run(spark, FX.parallel_fail(1)))
     assert "❌" in mmd
 
 
 def test_mermaid_gantt(spark):
-    s = summarize_spans(spans_df(spark, FX.compose3(0)))
-    run_id = s.workflow_runs.collect()[0]["run_id"]
-    g = make_mermaid_gantt(s, run_id)
+    g = make_mermaid_gantt(_one_run(spark, FX.compose3(0)))
     assert g.startswith("gantt")
     assert "    dateFormat x" in g  # unix-ms timestamps, reference :117-161
     assert "    section input_1 (Python task)" in g
