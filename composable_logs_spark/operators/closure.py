@@ -11,11 +11,14 @@ closure (FIXTURES.md invariant: depth ≤ 6; we default to 8 for margin).
 All linkage is keyed by (run_id, span_id): OTel span ids are unique only
 within one trace, and a 100 TB log holds millions of traces.
 
+Consumers: the queries layer (``queries/span_ops_q``, ``bound_under``,
+``contains_path``). ``plans.summarize_spans`` does not build the closure:
+it resolves each span's owning task with one run-local parent walk.
+
 Scale notes: each iteration is one shuffle join on (run_id, span_id);
 with depth ≤ 8 this is ≤ 8 shuffles TOTAL regardless of data size, and
-every frontier shrinks. For forests far deeper than the budget, pass a
-larger ``max_depth`` or switch to doubling (closure ⋈ closure), which
-needs only log2(depth) joins.
+every frontier shrinks. For forests deeper than the budget, pass a
+larger ``max_depth``.
 """
 
 from __future__ import annotations
@@ -36,9 +39,7 @@ def descendants(
     ``edges`` must have columns (run_id, parent_span_id, span_id) — see
     ``spans_ops.span_edges``. Equivalent to the reference's
     UDT.traverse_from for every root at once (opentelemetry_helpers.py:295-308)
-    but set-at-a-time: one closure table reused by every consumer, fixing
-    the reference's 3-traversals-per-task hazard
-    (opentelemetry_task_span_parser.py:385,405,408-409; SURVEY §4).
+    but set-at-a-time: one closure table for every root at once.
 
     With ``validate`` an extra pass asserts the forest really fits inside
     ``max_depth``.
@@ -129,58 +130,6 @@ def descendants(
             raise ValueError(
                 f"span forest deeper than max_depth={max_depth}; raise the budget"
             )
-    return closure
-
-
-def descendants_doubling(edges: DataFrame, max_depth: int = 1 << 16) -> DataFrame:
-    """Exponential-doubling closure: reachability in log2(depth) joins.
-
-    Each round joins the current closure with itself (paths of length
-    ≤ 2^k), so forests of depth 65k need only 16 self-joins — the right
-    variant when the forest is DEEP (lineage chains, comment threads),
-    where the per-level iterative walk would need one shuffle per level.
-    Returns (run_id, ancestor_span_id, span_id) with min path depth
-    omitted (reachability only).
-
-    For the shallow span forests of this engine the fixed-depth
-    ``descendants`` is faster; this exists for the deep-graph case and is
-    equivalence-tested against it.
-    """
-    # localCheckpoint, NOT cache: each round references the previous
-    # closure three times (union + both join sides), so a cached lineage
-    # grows 3^k logical nodes — and under AQE the eager explain-string
-    # per action doubles again per nesting level. Checkpointing flattens
-    # each round's plan to a scan, the standard Spark idiom for iterative
-    # fixpoints (same pattern as GraphX/connected-components loops).
-    closure = edges.select(
-        "run_id",
-        F.col("parent_span_id").alias("ancestor_span_id"),
-        "span_id",
-    ).localCheckpoint(eager=True)
-    n = closure.count()
-    reach = 1
-    while reach < max_depth:
-        step = (
-            closure.alias("l")
-            .join(
-                closure.alias("r"),
-                (F.col("l.span_id") == F.col("r.ancestor_span_id"))
-                & (F.col("l.run_id") == F.col("r.run_id")),
-                "inner",
-            )
-            .select(F.col("l.run_id"), F.col("l.ancestor_span_id"), F.col("r.span_id"))
-        )
-        new_closure = (
-            closure.unionByName(step)
-            .dropDuplicates(["run_id", "ancestor_span_id", "span_id"])
-            .localCheckpoint(eager=True)
-        )
-        # fixpoint: stop when no new pairs appear
-        new_n = new_closure.count()
-        if new_n == n:
-            break
-        closure, n = new_closure, new_n
-        reach *= 2
     return closure
 
 

@@ -119,17 +119,15 @@ def _any_startswith(k: Column, prefixes: Sequence[str]) -> Column:
     return cond
 
 
-def union_attributes(
-    spans: DataFrame, prefixes: Sequence[str] = (), strict: bool = True
-) -> DataFrame:
+def union_attributes(spans: DataFrame, prefixes: Sequence[str] = ()) -> DataFrame:
     """A1: conflict-checked union of all attribute maps in a span set
     (reference: Spans.get_attributes, opentelemetry_helpers.py:459-491 —
     raises if one key maps to two distinct values).
 
-    Returns one row per key: (key, value, n_values). With ``strict`` the
-    caller should assert max(n_values) == 1 — Spark aggregates cannot
-    raise mid-query, so the conflict check is an output column (SURVEY §4
-    "error-raising aggregates"). ``assert_no_conflicts`` does the check.
+    Returns one row per key: (key, value, n_values). A conflict is a
+    row with n_values > 1 — Spark aggregates cannot raise mid-query, so
+    the conflict check is an output column (SURVEY §4 "error-raising
+    aggregates").
     """
     exploded = (
         spans.select(F.explode_outer("attributes").alias("key", "value"))
@@ -145,18 +143,6 @@ def union_attributes(
         )
         .select("key", F.col("values").getItem(0).alias("value"), "n_values")
     )
-
-
-def assert_no_conflicts(attr_union: DataFrame) -> dict[str, str]:
-    """Collect the A1 result to a dict, raising on conflicting keys —
-    matches the reference's ValueError (opentelemetry_helpers.py:483-487).
-    Only used on per-run attribute sets (small); the distributed path
-    keeps conflicts as data."""
-    rows = attr_union.collect()
-    conflicts = [r["key"] for r in rows if r["n_values"] > 1]
-    if conflicts:
-        raise ValueError(f"Conflicting values for attribute keys: {sorted(conflicts)}")
-    return {r["key"]: r["value"] for r in rows}
 
 
 def new_spans(spans: DataFrame, seen_span_ids: DataFrame) -> DataFrame:

@@ -15,23 +15,27 @@ _get_logged_named_values :189-228). Output tables follow FIXTURES.md A3:
     artifacts(run_id, task_span_id, name, type, content, length)
 
 Design notes for scale:
-- ONE descendants closure (operators.closure) per input; every per-task
+- ONE grouped pass per run (``_owners``, applyInPandas over four narrow
+  columns) links every span to its execute-task owner; every per-task
   gather is then an equi-join + groupBy against it — replacing the
   reference's repeated subtree traversals (3 per task, SURVEY §4).
+  Spark runs no job and keeps no cache until an output is read.
 - Every join/groupBy keys on (run_id, span_id): OTel span ids are unique
   only within a trace; a production log holds millions of traces.
-- The whole pipeline is built-in expressions (no Python UDF), so it stays
-  inside whole-stage codegen.
+- Apart from the ownership pass, the pipeline is built-in expressions,
+  so it stays inside whole-stage codegen.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.closure import descendants
+# not called here; perfbench's trace hooks wrap summarize.descendants
+from ..operators.closure import descendants  # noqa: F401
 from ..spanlog import schema as S
 
 def _empty_map():
@@ -70,19 +74,46 @@ def _duration_s(start_col, end_col):
     )
 
 
+def _owners(run: pd.DataFrame) -> pd.DataFrame:
+    """Every (execute-task ancestor-or-self, span) pair of one run.
+
+    Walks each span up its parent chain with no depth bound; the visited
+    set ends the walk on a parent cycle. Tasks never nest in the
+    reference model, so a span normally has <= 1 owner."""
+    parent = dict(zip(run["span_id"], run["parent_id"]))
+    tasks = set(run["span_id"][run["is_task"]])
+    run_id = run["run_id"].iat[0]
+    pairs = []
+    for span in parent:
+        seen, node = set(), span
+        while node is not None and node not in seen:
+            seen.add(node)
+            if node in tasks:
+                pairs.append((run_id, node, span))
+            node = parent.get(node)
+    return pd.DataFrame(pairs, columns=["run_id", "task_span_id", "span_id"])
+
+
+def _attr_map(vals: DataFrame, keys: list[str], name: str) -> DataFrame:
+    """One attribute map per ``keys`` group from (key, vals) rows.
+
+    Entries are sorted by key, so the map's order (and every byte a sink
+    writes from it) does not depend on the shuffle. Conflict winner:
+    array_min, not getItem(0) — collect_set's order is nondeterministic;
+    conflicts are reported separately, but the surviving value must be
+    stable run-to-run."""
+    entry = F.struct(F.col("key"), F.array_min("vals").alias("value"))
+    return vals.groupBy(*keys).agg(
+        F.map_from_entries(F.array_sort(F.collect_list(entry))).alias(name)
+    )
+
+
 def summarize_spans(spans: DataFrame) -> SpanSummary:
-    # --- pre-digested narrow cache (r13 optimization round) -------------
-    # The cache used to hold FULL spans (context struct, raw events
-    # array, links, attributes). Profiling the 940k-span big fixture
-    # showed every consumer branch re-scanning that wide cache and the
-    # attribute pass shuffling whole map-typed rows (SortMergeJoin with
-    # 2.7 min cumulative shuffle-write time). Digest ONCE at cache time:
-    # span_id hoisted out of the context struct, the per-span exception
-    # count precomputed (drops the events array — with stacktrace
-    # payloads — from the cache entirely; guide §2.3 "shuffle keys and
-    # metadata instead of payloads"), status_code hoisted. Every value
-    # below is derived exactly as before, so all outputs are
-    # bit-identical (digest-locked by the bench goldens).
+    # Digest the wide span rows once into the narrow columns every pass
+    # reads: span_id hoisted out of the context struct, status_code out
+    # of the status struct, and the per-span exception count precomputed
+    # so the events array (with stacktrace payloads) never reaches a
+    # shuffle.
     spans = _with_run_id(spans).select(
         "run_id",
         F.col("context.span_id").alias("span_id"),
@@ -91,35 +122,15 @@ def summarize_spans(spans: DataFrame) -> SpanSummary:
         "start_time",
         "end_time",
         F.col("status.status_code").alias("status_code"),
-        # == count of exploded events with name=='exception' (A5): the
-        # old explode+filter+groupBy per-span count, folded to a size()
+        # == count of exploded events with name=='exception' (A5)
         F.coalesce(
             F.size(F.filter(F.col("events"), lambda e: e["name"] == F.lit("exception"))),
             F.lit(0),
         ).alias("n_exc_own"),
         "attributes",
         "links",
-    ).cache()
-
-    # --- closure: span -> owning execute-task span (computed ONCE) ------
-    # cached: the bounded closure is a deep join tree consumed by several
-    # branches (exceptions/attributes/values/artifacts) — without the
-    # cache every consumer re-executes all max_depth joins (this is the
-    # reference's _cached_graph memo, opentelemetry_helpers.py:407-419).
-    # r14: dropping this cache in favour of only the owned_incl cache
-    # below was measured 1.5x SLOWER cold on the 940k-span fixture
-    # (18.5 -> 27.6 s min-of-4) — the union-of-step-caches feeding the
-    # ownership join re-shuffles worse than one materialized relation —
-    # so BOTH stay cached.
-    edges = spans.where(F.col("parent_id").isNotNull()).select(
-        "run_id", F.col("parent_id").alias("parent_span_id"), "span_id"
     )
-    closure = descendants(edges).cache()
 
-    # cached separately (r13): task_spans is read by four consumers
-    # (owned, owned_incl, the task_runs base, run_success); uncached,
-    # each re-filtered the full span cache (4 extra 940k-row scans on
-    # the big fixture)
     task_spans = spans.where(F.col("name") == S.SPAN_EXECUTE_TASK).select(
         "run_id",
         F.col("span_id").alias("task_span_id"),
@@ -127,63 +138,49 @@ def summarize_spans(spans: DataFrame) -> SpanSummary:
         "start_time",
         "end_time",
         "attributes",
-    ).cache()
+    )
     task_keys = ["run_id", "task_span_id"]
 
-    # Map every span to its execute-task ancestor. Tasks never nest in the
-    # reference model, so each span has <= 1 execute-task ancestor.
+    # --- ownership: span -> execute-task ancestor-or-self (J3) ----------
+    # Every parent link stays inside one run (trace_id), so one grouped
+    # pass per run over four narrow columns resolves ownership: no
+    # per-depth job, no cache, no depth budget. The task span
+    # owns itself, so the exception and attribute passes run as ONE join
+    # + ONE groupBy instead of separate subtree and own-span branches.
     owned = (
-        closure.alias("c")
-        .join(
-            task_spans.select(*task_keys).alias("t"),
-            (F.col("c.ancestor_span_id") == F.col("t.task_span_id"))
-            & (F.col("c.run_id") == F.col("t.run_id")),
-            "inner",
+        spans.select(
+            "run_id",
+            "span_id",
+            "parent_id",
+            F.col("name").eqNullSafe(S.SPAN_EXECUTE_TASK).alias("is_task"),
         )
-        .select(F.col("c.run_id"), F.col("t.task_span_id"), F.col("c.span_id"))
+        .groupBy("run_id")
+        .applyInPandas(_owners, "run_id string, task_span_id string, span_id string")
     )
-    # inclusive variant (task span owns itself): lets the exception and
-    # attribute passes run as ONE join + ONE groupBy instead of separate
-    # subtree + own-span branches.
-    # r14: cached — owned_incl is read by the exception pass, the
-    # attribute pass, AND (new) the named-value/artifact gathers, so the
-    # closure ⋈ task_spans ownership join above runs once instead of
-    # once per consumer
-    owned_incl = owned.unionByName(
-        task_spans.select(
-            "run_id", "task_span_id", F.col("task_span_id").alias("span_id")
-        )
-    ).cache()
 
     # --- per-task exception counts (A5/A6) ------------------------------
-    # r13: the events array no longer rides the cache; the per-span count
-    # was precomputed at digest time, so the old explode(events) pass
-    # (1.9M generated rows on the big fixture) folds into a filtered
-    # narrow join + sum — identical totals (count of exploded exception
-    # rows == sum of per-span exception counts).
+    # The per-span count was precomputed at digest time, so the
+    # explode(events) pass folds into a filtered narrow join + sum —
+    # identical totals (count of exploded exception rows == sum of
+    # per-span exception counts).
     span_exc = spans.where(F.col("n_exc_own") > 0).select(
         "run_id", "span_id", "n_exc_own"
     )
     task_exc = (
-        owned_incl.join(span_exc, ["run_id", "span_id"], "inner")
+        owned.join(span_exc, ["run_id", "span_id"], "inner")
         .groupBy(*task_keys)
         .agg(F.sum("n_exc_own").alias("n_exc"))
     )
 
     # --- per-task attribute union (A1/A3) --------------------------------
     # task.* attributes from the task span and its whole subtree, merged
-    # with workflow.* attributes from the run's spans. Prefixes are
-    # disjoint by validation (wrappers.py:255-260).
+    # with workflow.* attributes from the run's spans. The prefix
+    # filters make the two key sets disjoint.
     #
-    # r13: explode + prefix-filter BEFORE the join (guide §2.3 "project
-    # before the exchange"). The old shape joined owned_incl against the
-    # full cached span rows — shuffling map-typed attribute payloads both
-    # ways through a SortMergeJoin (measured: the two exchanges cost
-    # 2.7 min + 1.1 min cumulative shuffle-write on the 940k-span
-    # fixture) — and exploded AFTER. Exploding a prefix-filtered map
-    # first ships only the narrow (run_id, span_id, key, value) entries
-    # that can survive, and the join carries no wide rows at all. Same
-    # rows out: explode(map_filter(m, p)) == explode(m).where(p).
+    # Explode + prefix-filter BEFORE the join (project before the
+    # exchange): only the narrow (run_id, span_id, key, value) entries
+    # that can survive are shuffled, never whole map-typed span rows.
+    # Same rows out: explode(map_filter(m, p)) == explode(m).where(p).
     task_attr_entries = spans.select(
         "run_id",
         "span_id",
@@ -192,7 +189,7 @@ def summarize_spans(spans: DataFrame) -> SpanSummary:
         ).alias("key", "value"),
     )
     task_attr_union = (
-        owned_incl.join(task_attr_entries, ["run_id", "span_id"], "inner")
+        owned.join(task_attr_entries, ["run_id", "span_id"], "inner")
         .groupBy(*task_keys, "key")
         .agg(F.collect_set("value").alias("vals"))
     )
@@ -201,18 +198,10 @@ def summarize_spans(spans: DataFrame) -> SpanSummary:
         F.lit("attribute-conflict").alias("kind"),
         F.col("key").alias("detail"),
     )
-    # conflict winner: array_min, not getItem(0) — collect_set's order is
-    # nondeterministic; conflicts are reported separately above, but the
-    # surviving value must be stable run-to-run
-    task_attrs = task_attr_union.groupBy(*task_keys).agg(
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col("key"), F.array_min("vals").alias("value")))
-        ).alias("task_attributes")
-    )
+    task_attrs = _attr_map(task_attr_union, task_keys, "task_attributes")
 
     # workflow.* attributes per run (A2) — union over ALL spans of the run
-    # (r13: same map_filter-before-explode shape as the task.* pass — the
-    # Generate emits only workflow.* entries instead of every attribute)
+    # (same map_filter-before-explode shape as the task.* pass)
     wf_attr_union = (
         spans.select(
             "run_id",
@@ -223,11 +212,7 @@ def summarize_spans(spans: DataFrame) -> SpanSummary:
         .groupBy("run_id", "key")
         .agg(F.collect_set("value").alias("vals"))
     )
-    wf_attrs = wf_attr_union.groupBy("run_id").agg(
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col("key"), F.array_min("vals").alias("value")))
-        ).alias("workflow_attributes")
-    )
+    wf_attrs = _attr_map(wf_attr_union, ["run_id"], "workflow_attributes")
 
     # --- task_runs --------------------------------------------------------
     task_runs = (
@@ -244,10 +229,11 @@ def summarize_spans(spans: DataFrame) -> SpanSummary:
             F.to_timestamp("end_time").alias("end_time"),
             _duration_s(F.col("start_time"), F.col("end_time")).alias("duration_s"),
             F.coalesce(F.col("n_exc"), F.lit(0)).cast("int").alias("n_exceptions"),
-            F.map_zip_with(
-                F.coalesce(F.col("workflow_attributes"), _empty_map()),
+            # disjoint key sets and "task." < "workflow.": the
+            # concatenation of the two sorted maps is sorted too
+            F.map_concat(
                 F.coalesce(F.col("task_attributes"), _empty_map()),
-                lambda k, wv, tv: F.coalesce(tv, wv),
+                F.coalesce(F.col("workflow_attributes"), _empty_map()),
             ).alias("attributes"),
         )
         .withColumn("is_success", F.col("n_exceptions") == 0)
@@ -283,16 +269,15 @@ def summarize_spans(spans: DataFrame) -> SpanSummary:
         F.col("attributes").getItem("content_encoded").alias("content_encoded"),
         F.to_timestamp("start_time").alias("start_time"),
     ]
-    # r14: joins owned_incl (the cached frame), not owned — identical
-    # matches: the extra task-owns-itself rows pair only with spans that
-    # ARE execute-task spans, which the named-value name filter excludes
+    # the task-owns-itself rows of ``owned`` pair only with execute-task
+    # spans, which the named-value name filter excludes
     named_values = (
         spans.where(
             (F.col("name") == S.SPAN_NAMED_VALUE)
             & (F.col("status_code") == "OK")  # F4
         )
         .select(*data_span_cols)
-        .join(owned_incl, ["run_id", "span_id"], "inner")
+        .join(owned, ["run_id", "span_id"], "inner")
     )
     dup_values = (
         named_values.groupBy(*task_keys, "name")
@@ -337,9 +322,9 @@ def summarize_spans(spans: DataFrame) -> SpanSummary:
             (F.col("name") == S.SPAN_ARTEFACT) & (F.col("status_code") == "OK")
         )
         .select(*data_span_cols)
-        # owned_incl, same argument as named_values: artefact spans are
-        # never execute-task spans, so the self-rows cannot match
-        .join(owned_incl, ["run_id", "span_id"], "inner")
+        # same argument as named_values: artefact spans are never
+        # execute-task spans, so the self-rows cannot match
+        .join(owned, ["run_id", "span_id"], "inner")
         .withColumn("_rn", F.row_number().over(_art_w))
         .where(F.col("_rn") == 1)
         .select(

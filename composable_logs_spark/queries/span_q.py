@@ -28,8 +28,9 @@ _FIXTURE_MEMO: dict = {}
 def _spans_df(spark: SparkSession, span_dicts) -> DataFrame:
     # memoized per (session, fixture): repeated calls then return the SAME
     # leaf DataFrame, so downstream plans canonicalize equal and the
-    # caches inside summarize_spans/descendants HIT instead of piling up
-    # one orphaned cache entry per call (each parallelize() is a fresh RDD).
+    # closure caches of span_ops_q's descendants() calls HIT instead of
+    # piling up one orphaned cache entry per call (each parallelize() is
+    # a fresh RDD). summarize_spans keeps no cache.
     # Keyed by applicationId, NOT id(spark) (r11 verdict): a GC'd and
     # re-created session can alias the same id() and serve a DataFrame
     # bound to a dead session; applicationId is unique per started context.

@@ -16,6 +16,14 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_mem() -> str:
+    """~40% of physical memory, capped at 48g: the local driver JVM holds
+    the executors too, and a heap sized past the machine gets the process
+    killed by the kernel instead of spilling."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(48, int(phys * 0.4) >> 30))}g"
+
+
 def get_spark(
     app_name: str = "composable_logs_spark",
     cpus: int | None = None,
@@ -44,7 +52,7 @@ def get_spark(
         # sessions we build ourselves (r11 verdict hygiene item).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -6,13 +6,9 @@ Semantics match the reference's SerializedData
 string), ``base64`` (bytes), ``json`` (everything else). Logging ``None``
 is rejected (reference :137-138). Round-trip law: decode(encode(x)) == x.
 
-Two layers are provided:
-- Python-side ``SerializedData`` used by the orchestrator/logger when it
-  writes spans, and
-- Spark-side column expressions (``decode_columns``) used by the
-  summarisation queries to turn a triple into typed columns — pure
-  built-in functions (unbase64/CASE/try_cast), no UDF, so the decode
-  stays in whole-stage codegen at 100 TB.
+``SerializedData`` is used by the orchestrator/logger when it writes
+spans; the Spark-side decode into typed columns lives in
+``plans/summarize.py`` (built-in CASE/cast, no UDF).
 """
 
 from __future__ import annotations
@@ -21,9 +17,6 @@ import base64
 import json
 from dataclasses import dataclass
 from typing import Any
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 VALID_TYPES = ("utf-8", "bytes", "int", "float", "bool", "json")
 VALID_ENCODINGS = ("utf-8", "base64", "json")
@@ -63,18 +56,3 @@ class SerializedData:
         if self.type in ("int", "float", "bool", "json") and self.encoding == "json":
             return json.loads(self.encoded_content)
         raise ValueError(f"Unknown type/encoding pair ({self.type}, {self.encoding})")
-
-
-def decode_columns(type_col: Column, content_col: Column) -> dict[str, Column]:
-    """Spark-native decode of a (type, encoded_content) pair into a set of
-    typed columns (one non-null per row). Used to build the
-    ``logged_values`` table — see FIXTURES.md A3.
-    """
-    return {
-        "value_str": F.when(type_col == "utf-8", content_col),
-        "value_bytes": F.when(type_col == "bytes", F.unbase64(content_col)),
-        "value_long": F.when(type_col == "int", content_col.cast("long")),
-        "value_double": F.when(type_col == "float", content_col.cast("double")),
-        "value_bool": F.when(type_col == "bool", content_col.cast("boolean")),
-        "value_json": F.when(type_col == "json", content_col),
-    }

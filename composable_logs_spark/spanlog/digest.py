@@ -2,7 +2,7 @@
 device that turns the 10^6-span fixture from invariant-checked into
 HASH-proven: the generator (``biggen``) is counter-deterministic, so
 the full summarisation result has exactly one correct value, and a
-pinned digest catches any closure/aggregation regression at relational
+pinned digest catches any ownership/aggregation regression at relational
 row counts the ~10^2-span golden fixtures cannot see.
 
 Digest = (row_count, sum of 40-bit row-hashes mod p1, same mod p2)

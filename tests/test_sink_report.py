@@ -26,9 +26,11 @@ R1 = "0x" + "0" * 31 + "1"
 WF = "artifacts/workflow/0x0000000000000001"
 
 # sha256 of every file both writers produce from FX.compose3(0) +
-# FX.parallel_fail(1) (two runs; span ids collide across them)
+# FX.parallel_fail(1) (two runs; span ids collide across them).
+# Attribute maps are sorted by key, so these bytes do not depend on the
+# shuffle order of the summary's attribute aggregation.
 GOLDEN = {
-    "static_data.json": "901e899cb56bbd0b7a184dd3bc4c8362509f51415ae9aa5d29a76e97fba1bb3d",
+    "static_data.json": "122485baaa72ffc8e5152dce78d83d895308cdb19d00798852f5b76245c7288f",
     f"{R0}/{WF}/dag.mmd": "26e7cde13eb8d89cd44273b389092ab7d3af7dffef0f5dd880116372d502840b",
     f"{R0}/{WF}/dag-nolinks.mmd": "5c5841fe229a9a24a84afd75821cc9f4e39e3ed55305cfdf757e371602706d2e",
     f"{R0}/{WF}/gantt.mmd": "3da5e993729a12a75cc0185ed37514834736f7314d022bdd9d26d5b16fa59fd2",
@@ -36,11 +38,11 @@ GOLDEN = {
     f"{R1}/{WF}/dag-nolinks.mmd": "1438e82a6ddfb7651980f0177a707ba7b272a1b20d294fdc3b20e27dda34e8bf",
     f"{R1}/{WF}/gantt.mmd": "7481bead0d155370e5b7ea1ad74a6f9f058943b095ecd3d09862a52a842a43e1",
     f"dir/{R0}/run-time-metadata.json": "a81816591b3eb03996aee6f30b4a07ea2e8ee27b604a5fc4d83380d6de623935",
-    f"dir/{R0}/python-task--input_1--0x0000000000000002--OK/run-time-metadata.json": "8a985d9a122bf92e8f8a3b58882599d5a2869174b2bbc1aa416d927eaa5337d6",
+    f"dir/{R0}/python-task--input_1--0x0000000000000002--OK/run-time-metadata.json": "a4a954bbbce6889613d8e3931e684031a93be9c6fc27aad3e95a1d722ef84647",
     f"dir/{R0}/python-task--input_2--0x0000000000000005--OK/run-time-metadata.json": "eea23114bae0af364fae2dfdf4fe252e966e2a78ef98c06f0b8f8782f05c2580",
     f"dir/{R0}/python-task--process--0x0000000000000008--OK/run-time-metadata.json": "f9889fac55e894ffc9cb8f803b8a9befb766a427367257292bd2257ad1bc5e65",
     f"dir/{R1}/run-time-metadata.json": "d9cc6378aff134d5186709473d137d363abf67bcf6ccba2625aa55996c25e5e8",
-    f"dir/{R1}/python-task--f--0x0000000000000002--OK/run-time-metadata.json": "9eb6e57707a9f0f5d2527aa9417d83a0862b4dcb336c687940c4ff356142a6af",
+    f"dir/{R1}/python-task--f--0x0000000000000002--OK/run-time-metadata.json": "b4636631a213d67a9b9467850ad67be9c17acd3761d6f930c47677f65ee59014",
     f"dir/{R1}/python-task--g--0x0000000000000005--FAILED/run-time-metadata.json": "bb6e91ddde71083d36e6180d118d51b846c7a2e30e7df4e85470c0299e9c32cf",
     f"dir/{R1}/python-task--h--0x0000000000000008--OK/run-time-metadata.json": "4c9771b99378338a50836c724bd3126a8fa66c3152bf9c2bd7df60ef3949a0d4",
 }

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from composable_logs_spark.plans import summarize_spans
 from composable_logs_spark.spanlog import fixtures as FX
+from composable_logs_spark.spanlog import schema as S
 
 from conftest import spans_df
 
@@ -168,3 +169,91 @@ def test_attr_conflict_reported_and_winner_deterministic(spark):
         )
         outs.append(row["attributes"]["task.x"])
     assert outs == ["0", "0"]  # min("0", "1") — deterministic winner
+
+
+def _task_span(spans, task_id):
+    return next(s for s in spans if s["attributes"].get("task.id") == task_id)
+
+
+def _values(s):
+    return sorted(
+        (r["task_span_id"], r["name"]) for r in s.logged_values.collect()
+    )
+
+
+def test_value_nested_12_levels_keeps_its_owner(spark):
+    # h's an_int value sits under h's call span (depth 3); re-parent it
+    # through 9 filler spans so it is 12 levels below the task
+    spans = FX.logged_values_fixture()
+    h = _task_span(spans, "h")
+    value = next(s for s in spans if s["attributes"].get("name") == "an_int")
+    parent = value["parent_id"]
+    for i in range(9):
+        filler = S.span_row(
+            f"0xdeep{i:011x}", S.SPAN_CALL_FUNCTION,
+            value["start_time"], value["end_time"],
+            trace_id=value["context"]["trace_id"], parent_id=parent,
+        )
+        spans.append(filler)
+        parent = filler["context"]["span_id"]
+    value["parent_id"] = parent
+
+    s = _summary(spark, spans)
+    assert len(s.logged_values.collect()) == 9
+    (row,) = s.logged_values.where(F.col("name") == "an_int").collect()
+    assert row["task_span_id"] == h["context"]["span_id"]
+    assert row["value_long"] == 42
+    assert s.validation_errors.collect() == []
+
+
+def test_parent_cycle_returns_a_summary(spark):
+    # task f -> guard -> call -> f: a parent cycle through the task
+    spans = FX.logged_values_fixture()
+    f = _task_span(spans, "f")
+    fid = f["context"]["span_id"]
+    guard = next(s for s in spans if s["parent_id"] == fid)
+    call = next(s for s in spans if s["parent_id"] == guard["context"]["span_id"])
+    f["parent_id"] = call["context"]["span_id"]
+
+    s = _summary(spark, spans)
+    expected = _values(_summary(spark, FX.logged_values_fixture()))
+    assert _values(s) == expected  # each value once, under its own task
+    assert s.validation_errors.collect() == []
+    runs = {r["task_id"]: r for r in s.task_runs.collect()}
+    assert set(runs) == {"f", "g", "h"}
+    assert runs["f"]["parent_span_id"] == call["context"]["span_id"]
+    assert runs["f"]["attributes"]["task.id"] == "f"
+
+
+def _persisted(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_summaries_keep_no_cache(spark):
+    from composable_logs_spark.sinks import collect_runs
+
+    before = _persisted(spark)
+    for fixture in (FX.compose3, FX.parallel_fail, FX.diamond5, FX.notebook_ok):
+        collect_runs(_summary(spark, fixture()))
+    assert _persisted(spark) == before
+
+
+def test_stream_batches_keep_no_cache(spark, tmp_path):
+    from composable_logs_spark.spanlog import SpanWriter
+    from composable_logs_spark.streaming import stream_task_runs
+
+    log_dir = tmp_path / "log"
+    log_dir.mkdir()
+    counts = []
+    before = _persisted(spark)
+    q = stream_task_runs(
+        spark, log_dir, lambda df, bid: counts.append(df.count()), str(tmp_path / "ckpt")
+    )
+    try:
+        for fixture in (FX.compose3, FX.parallel_fail, FX.diamond5):
+            SpanWriter(log_dir).write_many(fixture())
+            q.processAllAvailable()  # one micro-batch per new file
+    finally:
+        q.stop()
+    assert counts == [3, 3, 5]
+    assert _persisted(spark) == before
